@@ -27,6 +27,8 @@ object SurfaceQueries {
     * returning or propagating (guide §2.6 overlap; ADVICE r13 hardening):
     *  - both futures are awaited even when the first fails, so no orphaned
     *    in-flight job can race a retry/overwrite of the same target;
+    *  - the first failure propagates with the second one attached as
+    *    suppressed, so neither cause is lost;
     *  - a dedicated 2-thread executor (threads created lazily from THIS
     *    call, so SparkContext's InheritableThreadLocal job-group/description
     *    properties are inherited from the caller) instead of the shared
@@ -35,14 +37,19 @@ object SurfaceQueries {
   private[graft] def awaitBoth[A, B](fa: => A, fb: => B): (A, B) = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    import scala.util.Try
+    import scala.util.{Failure, Try}
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val f1 = Future(fa); val f2 = Future(fb)
       val r1 = Try(Await.result(f1, Duration.Inf))
       val r2 = Try(Await.result(f2, Duration.Inf))
-      (r1.get, r2.get) // both quiesced; first failure (if any) propagates
+      (r1, r2) match { // both quiesced
+        case (Failure(e1), Failure(e2)) =>
+          if (e1 ne e2) e1.addSuppressed(e2)
+          throw e1
+        case _ => (r1.get, r2.get)
+      }
     } finally pool.shutdown()
   }
 

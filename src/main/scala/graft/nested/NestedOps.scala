@@ -91,63 +91,126 @@ object NestedOps {
   // Packing / construction (reference: series/packer.py, nestedframe/core.py:385-743)
   // ---------------------------------------------------------------------------
 
+  /** Null placement of a sort key: `naPosition = None` keeps Spark's
+    * default (nulls first on ascending keys, last on descending);
+    * `Some("first")`/`Some("last")` force pandas-style placement regardless
+    * of direction (`sort_values(na_position=)`, core.py:1851-1942). */
+  private def nullsFirst(asc: Boolean, naPosition: Option[String]): Boolean =
+    naPosition match {
+      case None          => asc
+      case Some("first") => true
+      case Some("last")  => false
+      case Some(other) => throw new IllegalArgumentException(
+        s"na_position must be 'first' or 'last', got '$other'")
+    }
+
+  /** A sort key as ordered: pandas sort_values treats NaN as NA
+    * (na_position governs it) where Spark orders NaN as the LARGEST double,
+    * so floating keys rewrite NaN → NULL (r9s5 NaN-parity rule). */
+  private def sortKey(c: Column, dt: DataType): Column = dt match {
+    case DoubleType | FloatType => when(isnan(c), lit(null)).otherwise(c)
+    case _                      => c
+  }
+
   /** Comparator Column for `array_sort(expr, (l, r) => ...)` over struct
-    * elements, ordering by `keys` (field name, ascending?). Null placement:
-    * `naPosition = None` keeps Spark's default ordering (nulls first on
-    * ascending keys, last on descending); `Some("first")`/`Some("last")`
-    * force pandas-style placement regardless of direction
-    * (`sort_values(na_position=)`, core.py:1851-1942). */
+    * elements, ordering by `keys` (field name, ascending?) with
+    * [[nullsFirst]] placement; `schema` gives the key types. Interpreted
+    * once per comparison — only [[CellOrder]]'s fallback uses it. */
   private def structComparator(l: Column, r: Column,
                                keys: Seq[(String, Boolean)],
-                               naPosition: Option[String] = None,
-                               floatFields: Set[String] = Set.empty): Column = {
-    // pandas sort_values treats NaN as NA (na_position governs it); Spark
-    // orders NaN as the LARGEST double — rewrite NaN → NULL on floating
-    // keys so the existing null branches apply (r9s5 NaN-parity rule)
-    def key(c: Column, field: String): Column =
-      if (floatFields.contains(field)) when(isnan(c), lit(null)).otherwise(c)
-      else c
+                               naPosition: Option[String],
+                               schema: StructType): Column =
     keys.foldRight(lit(0)) { case ((field, asc), tail) =>
-      val (lf, rf) = (key(l.getField(field), field),
-        key(r.getField(field), field))
+      val dt = schema.find(_.name == field).fold[DataType](NullType)(_.dataType)
+      val (lf, rf) = (sortKey(l.getField(field), dt),
+        sortKey(r.getField(field), dt))
       val (lt, gt) = if (asc) (lit(-1), lit(1)) else (lit(1), lit(-1))
-      val nullsFirst = naPosition match {
-        case None      => asc // Spark default: asc→first, desc→last
-        case Some("first") => true
-        case Some("last")  => false
-        case Some(other) => throw new IllegalArgumentException(
-          s"na_position must be 'first' or 'last', got '$other'")
-      }
+      val nf = nullsFirst(asc, naPosition)
       when(lf.isNull && rf.isNull, tail)
-        .when(lf.isNull, if (nullsFirst) lit(-1) else lit(1))
-        .when(rf.isNull, if (nullsFirst) lit(1) else lit(-1))
+        .when(lf.isNull, if (nf) lit(-1) else lit(1))
+        .when(rf.isNull, if (nf) lit(1) else lit(-1))
         .when(lf < rf, lt)
         .when(lf > rf, gt)
         .otherwise(tail)
     }
-  }
 
-  /** Floating field names among `keys` in a flat `schema` — passed to
-    * [[structComparator]] so a NaN sort key orders as NA (na_position
-    * governs it) at pack time too, matching [[sortElements]] (r9s5
-    * NaN-parity rule; ADVICE r10). */
-  private def floatKeyFields(schema: org.apache.spark.sql.types.StructType,
-                             keys: Seq[(String, Boolean)]): Set[String] = {
-    val names = keys.map(_._1).toSet
-    schema.fields.collect {
-      case f if names.contains(f.name) &&
-        (f.dataType == DoubleType || f.dataType == FloatType) => f.name
-    }.toSet
+  /** The one sorted-cell primitive behind every ordering site
+    * ([[sortElements]], [[packFlat]], [[packFlatSalted]], [[fromFlat]]):
+    * orders cells of `payloadFields` elements by `keys` (fields of `schema`,
+    * ascending?) with [[nullsFirst]] placement and NaN as NA — the order
+    * of [[structComparator]].
+    *
+    * [[wrap]] turns an element into the struct (sort prefix…, tie-break…,
+    * `__p` = payload); [[sort]] orders a cell of wrapped elements with ONE
+    * native `sort_array` and extracts `__p` natively (GetArrayStructFields)
+    * — no per-comparison lambda, no per-element decode lambda. Per key, the
+    * prefix holds:
+    *  - a null flag `__n<i>` (`isNull`, false < true) when the key's null
+    *    placement differs from the sort's natural one (nulls first when
+    *    sorting ascending, last when descending);
+    *  - `__s<i>`: the key raw when its direction is the sort's, order-
+    *    reversed by [[descEncode]] otherwise.
+    * The sort runs descending only when every key is descending (raw keys,
+    * so descending strings stay native there), ascending otherwise. Ties
+    * break on whatever the caller puts between the prefix and the payload,
+    * then on the payload itself: the pack sites pass nothing (a
+    * deterministic total order by payload), [[sortInPlace]] the element
+    * position (the stable order of the comparator sort).
+    *
+    * Fallback: a key with no lossless reverse encode against the sort
+    * direction (a descending string beside an ascending key), or a
+    * non-orderable key or payload, sorts with [[structComparator]] —
+    * [[wrap]] is then the identity. No keys: no sort. */
+  private final class CellOrder(schema: StructType,
+                                keys: Seq[(String, Boolean)],
+                                payloadFields: Seq[String],
+                                naPosition: Option[String] = None) {
+    import org.apache.spark.sql.catalyst.expressions.RowOrdering
+    private val keyNullsFirst =
+      keys.map { case (_, a) => nullsFirst(a, naPosition) }
+    private val asc = keys.exists(_._2)
+    private def typeOf(f: String) = schema(f).dataType
+    private val native = keys.nonEmpty &&
+      (keys.map(_._1) ++ payloadFields).forall(schema.fieldNames.contains) &&
+      RowOrdering.isOrderable(
+        StructType((keys.map(_._1) ++ payloadFields).map(schema(_)))) &&
+      keys.forall { case (f, a) => a == asc || descEncodable(typeOf(f)) }
+
+    /** The sort struct of one element: `field` reads a key of it. */
+    def wrap(field: String => Column, payload: Column, tie: Column*): Column =
+      if (!native) payload
+      else struct((keys.zip(keyNullsFirst).zipWithIndex.flatMap {
+        case (((f, a), nf), i) =>
+          val k = sortKey(field(f), typeOf(f))
+          val flag = if (nf != asc) Seq(k.isNull.as(s"__n$i")) else Nil
+          flag :+ (if (a == asc) k else descEncode(k, typeOf(f))).as(s"__s$i")
+      } ++ tie :+ payload.as("__p")): _*)
+
+    /** A cell of [[wrap]]ped elements, sorted, as payloads. */
+    def sort(cells: Column): Column =
+      if (native) sort_array(cells, asc).getField("__p")
+      else if (keys.isEmpty) cells
+      else array_sort(cells,
+        (l, r) => structComparator(l, r, keys, naPosition, schema))
+
+    /** An existing cell of payloads, sorted; ties keep element order. */
+    def sortInPlace(cell: Column): Column =
+      if (!native) sort(cell)
+      else sort(transform(cell, (x, i) =>
+        wrap(x.getField, x, (if (asc) i else bitwise_not(i)).as("__t"))))
   }
 
   /** Pack a flat child frame into one row per key with a nested column.
     *
     * Reference: `pack_flat` (series/packer.py:64-117) — group by index, one
-    * sub-frame per key. Deterministic element order is achieved with
-    * `array_sort` after `collect_list` when `sortBy` is given (the reference
-    * stable-sorts by index; within-key order there is input order, which Spark
-    * does not guarantee across shuffles — callers that need determinism pass
-    * `sortBy`).
+    * sub-frame per key. Deterministic element order is achieved by sorting
+    * each collected cell with [[CellOrder]] when `sortBy` is given (the
+    * reference stable-sorts by index; within-key order there is input
+    * order, which Spark does not guarantee across shuffles — callers that
+    * need determinism pass `sortBy`). Ties break by the payload fields, a
+    * deterministic TOTAL order (shuffle-arrival order would be
+    * fetch-order-dependent and not retry-stable); a non-encodable key
+    * (see [[CellOrder]]) falls back to the comparator and arrival order.
     *
     * NULL-key semantics (documented delta from the reference, which RAISES on
     * NaN keys, packer.py:102-117): NULL-key child rows form a NULL-key group
@@ -189,80 +252,17 @@ object NestedOps {
         val src =
           if (clusteredOn(child, on)) child
           else child.repartition(on.map(col): _*)
-        def comparatorSorted = src
-          .groupBy(on.map(col): _*)
-          .agg(collect_list(struct(valueCols.map(col): _*)).as(name))
-          .withColumn(name,
-            array_sort(col(name), (l, r) => structComparator(l, r, sortBy,
-              floatFields = floatKeyFields(child.schema, sortBy))))
-        val uniformDir = sortBy.forall(_._2) || sortBy.forall(!_._2)
-        if (sortBy.isEmpty)
-          src.groupBy(on.map(col): _*)
-            .agg(collect_list(struct(valueCols.map(col): _*)).as(name))
-        else if (uniformDir && naturalSortEligible(child, on, sortBy)) {
-          // Fast path: the interpreted comparator lambda runs once per
-          // COMPARISON (n log n per cell, no codegen); a key-prefixed
-          // struct under sort_array's native ordering sorts the same keys
-          // with the same null placement (asc → nulls first, desc → last —
-          // exactly structComparator's naPosition=None rule) at a fraction
-          // of the cost. Floating keys join the fast path (r13) by
-          // rewriting NaN → NULL in the SORT PREFIX only (the payload
-          // keeps the raw values) — exactly the comparator's NaN-as-NA
-          // rule, so NaN orders with the nulls on either direction.
-          // Requires uniform directions. Ties break by the remaining
-          // payload fields — a deterministic TOTAL order, where the
-          // comparator path fell back to shuffle-arrival order (which
-          // at scale is fetch-order-dependent and not retry-stable).
-          val asc = sortBy.head._2
-          val floats = floatKeyFields(child.schema, sortBy)
-          def keyCol(f: String): Column =
-            if (floats.contains(f)) when(isnan(col(f)), lit(null)).otherwise(col(f))
-            else col(f)
-          val ordChild = struct((sortBy.zipWithIndex.map { case ((f, _), i) =>
-            keyCol(f).as(s"__s$i") } :+
-            struct(valueCols.map(col): _*).as("__p")): _*)
-          src.groupBy(on.map(col): _*)
-            .agg(sort_array(collect_list(ordChild), asc = asc).as(name))
-            .withColumn(name, transform(col(name), x => x.getField("__p")))
-        } else if (naturalSortEligible(child, on, sortBy) &&
-            sortBy.forall { case (f, asc) =>
-              asc || descEncodable(child.schema(f).dataType) }) {
-          // MIXED-direction fast path (r14): one GLOBAL ascending
-          // sort_array with per-key encodings that reproduce
-          // structComparator's naPosition=None placement exactly —
-          //  - ascending keys ride raw (NaN → NULL on floats): native asc
-          //    order puts nulls first, the comparator's asc rule;
-          //  - descending keys become the pair (is-null flag, order-
-          //    reversed value): flag 0 < 1 puts nulls LAST (the
-          //    comparator's desc rule), and [[descEncode]] reverses the
-          //    value order losslessly per type (bitwise NOT for integral
-          //    types — no MinValue negation overflow — negate for
-          //    float/double/decimal, epoch arithmetic for date/timestamp).
-          // Strings (no order-reversing encode) keep the comparator path.
-          // Ties break by the remaining payload fields ascending — a
-          // deterministic total order, like the uniform fast path.
-          val floats = floatKeyFields(child.schema, sortBy)
-          def keyCol(f: String): Column =
-            if (floats.contains(f)) when(isnan(col(f)), lit(null)).otherwise(col(f))
-            else col(f)
-          val prefix = sortBy.zipWithIndex.flatMap { case ((f, asc), i) =>
-            if (asc) Seq(keyCol(f).as(s"__s$i"))
-            else {
-              val k = keyCol(f)
-              Seq(k.isNull.cast("int").as(s"__n$i"),
-                descEncode(k, child.schema(f).dataType).as(s"__s$i"))
-            }
-          }
-          val ordChild = struct(
-            (prefix :+ struct(valueCols.map(col): _*).as("__p")): _*)
-          src.groupBy(on.map(col): _*)
-            .agg(sort_array(collect_list(ordChild), asc = true).as(name))
-            .withColumn(name, transform(col(name), x => x.getField("__p")))
-        } else comparatorSorted
+        // the sort prefix is built from the flat columns before the
+        // collect, so the sorted pack adds no per-element lambda
+        val ord = new CellOrder(child.schema, sortBy, valueCols)
+        src.groupBy(on.map(col): _*)
+          .agg(ord.sort(collect_list(
+            ord.wrap(col, struct(valueCols.map(col): _*)))).as(name))
     }
 
-  /** Types with a lossless ORDER-REVERSING encode for the mixed-direction
-    * fast path (strings have none — they fall back to the comparator). */
+  /** Types with a lossless ORDER-REVERSING encode for [[CellOrder]]
+    * (strings have none — against the sort direction they fall back to the
+    * comparator). */
   private def descEncodable(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType | DateType |
          TimestampType | TimestampNTZType | FloatType | DoubleType |
@@ -299,18 +299,6 @@ object NestedOps {
     case other => throw new IllegalArgumentException(
       s"descEncode: unsupported type $other")
   }
-
-  /** The natural-ordering fast path needs every sort key AND the payload
-    * tie-break to be orderable types. */
-  private def naturalSortEligible(child: DataFrame, on: Seq[String],
-                                  sortBy: Seq[(String, Boolean)]): Boolean =
-    try {
-      import org.apache.spark.sql.catalyst.expressions.RowOrdering
-      val valueCols = child.columns.filterNot(on.contains).toSeq
-      RowOrdering.isOrderable(StructType(
-        sortBy.map { case (f, _) => child.schema(f) } ++
-          valueCols.map(c => child.schema(c))))
-    } catch { case _: Throwable => false }
 
   /** Whether `child`'s physical output partitioning already satisfies a
     * clustering on `on` (bucketed scan, previous keyed exchange) — probed
@@ -385,8 +373,7 @@ object NestedOps {
         col(f).as(s"__s$i") } :+ payload.as("__p")): _*)
       child.groupBy(on.map(col): _*)
         .agg(GraftCollectTopK.column(ordChild, maxPerKey, asc)
-          .as(name))
-        .withColumn(name, transform(col(name), x => x.getField("__p")))
+          .getField("__p").as(name))
     }
   }
 
@@ -477,16 +464,14 @@ object NestedOps {
     val salted = child.withColumn("__salt",
       pmod(spark_partition_id() + monotonically_increasing_id(),
         lit(saltBuckets)))
+    val ord = new CellOrder(child.schema, sortBy, valueCols)
     val partial = salted
       .groupBy((on :+ "__salt").map(col): _*)
-      .agg(collect_list(struct(valueCols.map(col): _*)).as("__part"))
-    val merged = partial
+      .agg(collect_list(ord.wrap(col, struct(valueCols.map(col): _*)))
+        .as("__part"))
+    partial
       .groupBy(on.map(col): _*)
-      .agg(flatten(collect_list(col("__part"))).as(name))
-    if (sortBy.isEmpty) merged
-    else merged.withColumn(name,
-      array_sort(col(name), (l, r) => structComparator(l, r, sortBy,
-        floatFields = floatKeyFields(child.schema, sortBy))))
+      .agg(ord.sort(flatten(collect_list(col("__part")))).as(name))
   }
 
   /** Group-join: pack `child` by `on` and join onto `base`.
@@ -519,13 +504,11 @@ object NestedOps {
     // (reference test_get_dot_names, test_nestedframe.py:417-426) and a
     // bare col(".b.") parses the dots as a field path
     def c(n: String) = col("`" + n.replace("`", "``") + "`")
+    val ord = new CellOrder(df.schema, sortBy, nestedCols)
     val aggs = baseCols.map(n => first(c(n)).as(n)) :+
-      collect_list(struct(nestedCols.map(n => c(n).as(n)): _*)).as(name)
-    val packed = df.groupBy(on.map(c): _*).agg(aggs.head, aggs.tail: _*)
-    if (sortBy.isEmpty) packed
-    else packed.withColumn(name,
-      array_sort(c(name), (l, r) => structComparator(l, r, sortBy,
-        floatFields = floatKeyFields(df.schema, sortBy))))
+      ord.sort(collect_list(ord.wrap(c,
+        struct(nestedCols.map(n => c(n).as(n)): _*)))).as(name)
+    df.groupBy(on.map(c): _*).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Zip equal-length list columns into one nested column.
@@ -1250,16 +1233,14 @@ object NestedOps {
   /** Sort elements within each nested cell by one or more (field, ascending)
     * keys, mixed directions supported. Reference guarantees the row index stays
     * the outer sort key (core.py:1949-1956); here rows are untouched.
-    * Narrow `array_sort` with a struct comparator — no explode/shuffle. */
+    * Narrow [[CellOrder]] sort — one native `sort_array` per cell, ties in
+    * element order — no explode/shuffle. */
   def sortElements(df: DataFrame, nest: String,
                    keys: Seq[(String, Boolean)],
                    naPosition: Option[String] = None): DataFrame = {
-    val floats = nestedStruct(df, nest).fields.collect {
-      case f if f.dataType == DoubleType || f.dataType == FloatType => f.name
-    }.toSet
-    df.withColumn(nest,
-      array_sort(col(nest),
-        (l, r) => structComparator(l, r, keys, naPosition, floats)))
+    val elem = nestedStruct(df, nest)
+    df.withColumn(nest, new CellOrder(elem, keys, elem.fieldNames.toSeq,
+      naPosition).sortInPlace(col(nest)))
   }
 
   // ---------------------------------------------------------------------------

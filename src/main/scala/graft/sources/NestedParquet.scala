@@ -78,13 +78,15 @@ object NestedParquet {
   }
 
   /** Write with nested columns transposed to struct-of-list (the reference's
-    * on-disk format, enabling its leaf-level partial loading). */
+    * on-disk format, enabling its leaf-level partial loading). Each field
+    * list is a native field-path extraction (GetArrayStructFields), not a
+    * per-element lambda. */
   def writeStructOfList(df: DataFrame, path: String,
                         mode: String = "overwrite"): Unit = {
     val out = NestedOps.nestedColumns(df).foldLeft(df) { (d, nest) =>
       val fields = NestedOps.subColumns(d, nest)
-      d.withColumn(nest, struct(fields.map(fl =>
-        transform(col(nest), s => s.getField(fl)).as(fl)): _*))
+      d.withColumn(nest,
+        struct(fields.map(fl => col(nest).getField(fl).as(fl)): _*))
     }
     out.write.mode(mode).parquet(path)
   }

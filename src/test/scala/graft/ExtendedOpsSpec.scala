@@ -148,6 +148,83 @@ class ExtendedOpsSpec extends SparkSpec {
     assert(c0.toSeq == Seq(0, 1, 1))
   }
 
+  test("writeStructOfList: native field lists write the same parquet " +
+      "schema (every nullability flag) as per-element transforms; NULL " +
+      "cell, empty cell and NULL element round-trip") {
+    import org.apache.spark.sql.Row
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    // one nest that may hold NULL elements with a required field, one whose
+    // array and elements are both required
+    val e1 = StructType(Seq(StructField("a", IntegerType, nullable = false),
+      StructField("b", StringType)))
+    val e2 = StructType(Seq(StructField("x", DoubleType),
+      StructField("y", LongType, nullable = false)))
+    val schema = StructType(Seq(StructField("key", LongType, nullable = false),
+      StructField("n1", ArrayType(e1, containsNull = true)),
+      StructField("n2", ArrayType(e2, containsNull = false), nullable = false)))
+    val rows = Seq(
+      Row(0L, Seq(Row(1, "x"), null, Row(2, null)), Seq(Row(0.5, 1L))),
+      Row(1L, null, Seq(Row(null, 2L), Row(1.5, 3L))),
+      Row(2L, Seq(), Seq()))
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val tmp = Files.createTempDirectory("sol-schema").toString
+    val (native, lambda) = (s"$tmp/native.parquet", s"$tmp/lambda.parquet")
+    NestedParquet.writeStructOfList(df, native)
+    // the per-element transform formulation the writer used before
+    Seq("n1", "n2").foldLeft(df) { (d, nest) =>
+      d.withColumn(nest, struct(NestedOps.subColumns(d, nest).map(fl =>
+        transform(col(nest), s => s.getField(fl)).as(fl)): _*))
+    }.write.mode("overwrite").parquet(lambda)
+    def footer(dir: String) = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val part = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+        .globStatus(new org.apache.hadoop.fs.Path(s"$dir/part-*.parquet"))
+        .head.getPath
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(part, conf))
+      try {
+        val meta = r.getFooter.getFileMetaData
+        (meta.getSchema.toString,
+          meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      } finally r.close()
+    }
+    val (nativeSchema, nativeSpark) = footer(native)
+    val (lambdaSchema, lambdaSpark) = footer(lambda)
+    assert(nativeSchema == lambdaSchema)
+    assert(nativeSpark == lambdaSpark)
+    // a required field of required elements stays a required leaf (n2.y);
+    // one of nullable elements (n1.a) cannot
+    assert(nativeSchema.contains("required int64 element"), nativeSchema)
+    assert(!nativeSchema.contains("required int32 element"), nativeSchema)
+    def back(dir: String) = NestedParquet.readCompat(spark, dir)
+      .orderBy("key").collect().toSeq
+    val got = back(native)
+    assert(got == back(lambda))
+    // NULL cell stays NULL, empty stays empty, a NULL element keeps its
+    // slot as an element of NULL fields
+    assert(got(1).isNullAt(1))
+    assert(got(2).getSeq[Row](1).isEmpty && got(2).getSeq[Row](2).isEmpty)
+    assert(got(0).getSeq[Row](1) ==
+      Seq(Row(1, "x"), Row(null, null), Row(2, null)))
+  }
+
+  test("awaitBoth keeps both failures: the second is attached as " +
+      "suppressed") {
+    val e = intercept[IllegalStateException] {
+      SurfaceQueries.awaitBoth[Int, Int](
+        throw new IllegalStateException("first"),
+        throw new IllegalArgumentException("second"))
+    }
+    assert(e.getMessage == "first")
+    assert(e.getSuppressed.toSeq.map(_.getMessage) == Seq("second"))
+    val one = intercept[IllegalArgumentException] {
+      SurfaceQueries.awaitBoth[Int, Int](1,
+        throw new IllegalArgumentException("only"))
+    }
+    assert(one.getMessage == "only" && one.getSuppressed.isEmpty)
+    assert(SurfaceQueries.awaitBoth(1, "b") == ((1, "b")))
+  }
+
   test("selectColumns partial nested load + conflict error") {
     val pruned = NestedParquet.selectColumns(nf, Seq("key", "nested.c"))
     assert(pruned.columns.toSeq == Seq("key", "nested"))

@@ -225,6 +225,134 @@ class NestedOpsSpec extends SparkSpec {
     assert(ngot == Seq("b", "a", "c", "d"), ngot)
   }
 
+  /** ArraySort (comparator lambda) nodes in the analyzed plan (the
+    * optimizer folds a projection over local data away). */
+  private def comparators(d: org.apache.spark.sql.DataFrame): Int =
+    d.queryExecution.analyzed.map(_.expressions.map(_.collect {
+      case a: org.apache.spark.sql.catalyst.expressions.ArraySort => a
+    }.size).sum).sum
+
+  test("sortElements native encode = comparator order for every encodable " +
+      "type, direction and na_position, ties in element order") {
+    import org.apache.spark.sql.types._
+    import java.time.{LocalDate, LocalDateTime}
+    import java.math.{BigDecimal => JBigDecimal}
+    // per type: ties, NULL keys and the type's extremes (NaN and ±0.0 on
+    // floating types, MinValue on integral ones)
+    val cases: Seq[(DataType, Seq[Any])] = Seq(
+      ByteType -> Seq(Byte.MinValue, 3.toByte, null, 3.toByte, Byte.MaxValue,
+        (-1).toByte, null, 0.toByte),
+      ShortType -> Seq(Short.MinValue, 7.toShort, null, 7.toShort,
+        Short.MaxValue, (-1).toShort, 0.toShort, null),
+      IntegerType -> Seq(Int.MinValue, 5, null, 5, Int.MaxValue, -1, 0, null),
+      LongType -> Seq(Long.MinValue, 5L, null, 5L, Long.MaxValue, -1L, 0L,
+        Long.MinValue, null),
+      FloatType -> Seq(1.5f, null, Float.NaN, 0.0f, -0.0f, 1.5f, -3.0f,
+        Float.MaxValue, -Float.MaxValue, Float.NaN, Float.NegativeInfinity,
+        Float.PositiveInfinity, 0.0f),
+      DoubleType -> Seq(1.5, null, Double.NaN, 0.0, -0.0, 1.5, -3.0,
+        Double.MaxValue, -Double.MaxValue, Double.NaN, Double.NegativeInfinity,
+        Double.PositiveInfinity, -0.0),
+      BooleanType -> Seq(true, false, null, true, false, null, true),
+      DecimalType(12, 3) -> Seq(new JBigDecimal("1.500"), null,
+        new JBigDecimal("-999999999.999"), new JBigDecimal("0.000"),
+        new JBigDecimal("1.500"), new JBigDecimal("999999999.999"), null,
+        new JBigDecimal("-0.001")),
+      DateType -> Seq(LocalDate.of(2020, 1, 2), null, LocalDate.of(1969, 12, 31),
+        LocalDate.of(2020, 1, 2), LocalDate.of(1, 1, 1),
+        LocalDate.of(9999, 12, 31), null),
+      TimestampType -> Seq(java.sql.Timestamp.valueOf("2020-01-02 00:00:00.000001"),
+        null, java.sql.Timestamp.valueOf("1969-12-31 23:59:59.999999"),
+        java.sql.Timestamp.valueOf("2020-01-02 00:00:00.000001"),
+        java.sql.Timestamp.valueOf("2020-01-02 00:00:00"), null),
+      TimestampNTZType -> Seq(LocalDateTime.parse("2020-03-08T02:30:00.000002"),
+        null, LocalDateTime.parse("2020-03-08T02:30:00.000001"),
+        LocalDateTime.parse("1969-12-31T23:59:59.999999"),
+        LocalDateTime.parse("2020-03-08T02:30:00.000002"), null))
+    val keySets = Seq(Seq(("v", true)), Seq(("v", false)),
+      Seq(("g", true), ("v", false)), Seq(("g", false), ("v", true)))
+    val variants = for (keys <- keySets;
+                        na <- Seq(None, Some("first"), Some("last")))
+      yield (keys, na)
+    for ((dt, values) <- cases) {
+      def elem(withMap: Boolean)(id: Int, v: Any): Row = {
+        // g: a second key with ties and NULLs
+        val g = if (id % 4 == 1) null else id % 3
+        if (withMap) Row(id, g, v, Map("k" -> id)) else Row(id, g, v)
+      }
+      // cells: every value with two NULL elements, a NULL cell, an empty
+      // cell, the values in reverse order (ties arrive the other way round)
+      // and a single element
+      def cells(withMap: Boolean): Seq[Seq[Row]] = {
+        val e = values.zipWithIndex.map { case (v, i) => elem(withMap)(i, v) }
+        val withNulls = (null +: e.take(3)) ++ (null +: e.drop(3))
+        Seq(withNulls, null, Nil, e.reverse, e.take(1))
+      }
+      val fields = Seq(StructField("id", IntegerType),
+        StructField("g", IntegerType), StructField("v", dt))
+      val plain = StructType(fields)
+      val mapped = StructType(fields :+
+        StructField("m", MapType(StringType, IntegerType)))
+      val rows = cells(false).zip(cells(true)).zipWithIndex.map {
+        case ((n, nm), k) => Row(k.toLong, n, nm)
+      }
+      val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        StructType(Seq(StructField("k", LongType),
+          StructField("n", ArrayType(plain)),
+          StructField("nm", ArrayType(mapped)))))
+      // the map field makes the element non-orderable, so "nm" takes the
+      // comparator fallback with the same keys and placement
+      def sortAll(src: String) = variants.zipWithIndex
+        .foldLeft(df.select(col("k"), col(src).as("src"))) {
+          case (d, ((keys, na), j)) => NestedOps.sortElements(
+            d.withColumn(s"o$j", col("src")), s"o$j", keys, na)
+        }.select(col("k") +: variants.indices.map(j => col(s"o$j.id")): _*)
+      val native = sortAll("n")
+      val viaComparator = sortAll("nm")
+      assert(comparators(native) == 0, s"$dt: comparator on the native path")
+      assert(comparators(viaComparator) == variants.size,
+        s"$dt: the map-field cells should take the comparator")
+      val got = native.orderBy("k").collect()
+      val want = viaComparator.orderBy("k").collect()
+      for (r <- got.indices; j <- variants.indices) {
+        val (g, w) = (Option(got(r).getSeq[Any](j + 1)),
+          Option(want(r).getSeq[Any](j + 1)))
+        assert(g == w, s"$dt ${variants(j)} cell $r: native $g, comparator $w")
+      }
+    }
+  }
+
+  test("sortElements string keys: all-descending stays native, a " +
+      "descending string beside an ascending key falls back") {
+    val df = Seq((1L, Seq(("b", 1), ("a", 2), (null, 3), ("b", 0), ("c", 4))))
+      .toDF("k", "n")
+    def order(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("n._2")).as[Seq[Int]].collect().head
+    val desc = NestedOps.sortElements(df, "n", Seq(("_1", false)))
+    assert(comparators(desc) == 0)
+    assert(order(desc) == Seq(4, 1, 0, 2, 3)) // nulls last, ties in order
+    val descFirst = NestedOps.sortElements(df, "n", Seq(("_1", false)),
+      Some("first"))
+    assert(comparators(descFirst) == 0)
+    assert(order(descFirst) == Seq(3, 4, 1, 0, 2))
+    val mixed = NestedOps.sortElements(df, "n", Seq(("_1", false), ("_2", true)))
+    assert(comparators(mixed) == 1)
+    assert(order(mixed) == Seq(4, 0, 1, 2, 3))
+  }
+
+  test("ordering sites plan no comparator lambda for encodable keys: " +
+      "q_sort_napos, q_sort_head, q_from_flat, q_pack_salted") {
+    for (q <- Seq("q_sort_napos", "q_sort_head", "q_from_flat",
+        "q_pack_salted")) {
+      val d = SparkEntry.queries(q)(spark, sf0001)
+      assert(comparators(d) == 0, s"$q plans a comparator lambda")
+    }
+    // the mixed-direction sorted pack of q_sort_head is one native sort
+    val plan = SparkEntry.queries("q_sort_head")(spark, sf0001)
+      .queryExecution.optimizedPlan.toString
+    assert(plan.contains("sort_array"), plan)
+  }
+
   test("sortElements multi-key mixed direction") {
     val r = nf.sortElements("nested", ("c", false), ("d", true))
     val firstC = r.orderBy($"key").select(expr("nested[0].c")).as[Int].collect()

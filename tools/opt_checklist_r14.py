@@ -123,7 +123,7 @@ def main() -> None:
     print("|---|---|---|---|---|")
     for k in sorted(b):
         x, y = a.get(k), b[k]
-        d = f"{(y - x) / x * 100:+.0f}%" if x else "n/a"
+        d = "n/a" if x is None or x == 0 else f"{(y - x) / x * 100:+.0f}%"
         note = ", ".join(touched.get(k, []))
         if k in LEFT_ALONE:
             note = (note + "; " if note else "") + LEFT_ALONE[k]
@@ -131,7 +131,8 @@ def main() -> None:
             note = ("r13-optimized shape unchanged; re-examined r14 "
                     "(profile/plan), at the single-row-group scan + "
                     "framework-gap floor")
-        print(f"| {k} | {x:.3f} | {y:.3f} | {d} | {note} |")
+        base = "—" if x is None else f"{x:.3f}"
+        print(f"| {k} | {base} | {y:.3f} | {d} | {note} |")
 
 
 if __name__ == "__main__":
